@@ -2,7 +2,8 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.{Cells, ColumnName, DataRequest, EntityView}
@@ -34,6 +35,13 @@ final case class Capsule(
     scorer: Scorer,
     stores: Map[String, DataFrame])
 
+/** One capsule's rows checked, stale, scored within the budget, and stale
+  * over budget (passed through stale). */
+final case class CapsuleReport(attachment: ColumnName, checked: Long, stale: Long,
+    scored: Long, overBudget: Long)
+/** Per-capsule counts, plus the rows allowPartial=false leaves unchanged. */
+final case class FreshenReport(capsules: Seq[CapsuleReport], blockedRows: Long)
+
 /** The batch freshening engine — the Spark-native `FreshKijiTableReader`
   * (reference: `src/main/java/org/kiji/scoring/impl/InternalFreshKijiTableReader.java:665-725`).
   *
@@ -49,13 +57,16 @@ final case class Capsule(
   * (`impl/InternalFreshKijiTableReader.java:624-661`) collapses: Spark task
   * parallelism replaces the pool, stage barriers give "all finished", and the
   * deterministic row budget reproduces the stale-fallback semantics
-  * (`:703-724`) without wall clocks. Rows beyond budget pass through stale
-  * and are picked up by the next run — the "late commit" equivalence
-  * (`test/impl/TestInternalFreshKijiTableReader.java:497-506`).
+  * (`:703-724`) without wall clocks.
   *
-  * Scale: all per-row work is expression-level (whole-stage codegen); the
-  * only shuffles are the scored-rows equi-join back onto the slice (broadcast
-  * when the scored set is small) and any aggregation inside a Scorer.
+  * Plan shape, the same for any number k of capsules: one projection of
+  * every stale flag; with a budget, one bounded top-n of the stale ids per
+  * capsule folded into a one-row cutoff frame, read as a scalar subquery;
+  * each Scorer over its rows; one wide union, one group by entity id and
+  * one join back. No job runs while the frame is built. The top-n keeps n
+  * ids per capsule and map task before its shuffle while n is at most
+  * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); above
+  * that, one task sorts all of a capsule's stale ids.
   */
 final class FreshReader(
     val manager: FreshnessManager,
@@ -63,6 +74,7 @@ final class FreshReader(
     view: DataFrame,
     config: FreshReaderConfig,
     storeLoader: String => DataFrame = FreshReader.noStores) {
+  import FreshReader._
 
   private val capsuleCache = mutable.LinkedHashMap.empty[String, Capsule]
 
@@ -108,133 +120,105 @@ final class FreshReader(
   private def freshenSlice(slice: DataFrame, request: DataRequest): DataFrame = {
     val capsules = capsulesFor(request)
     if (capsules.isEmpty) request.select(slice) // no-policy fast path (:674-679)
-    else request.select(freshenCapsules(slice, capsules))
+    else request.select(freshenMerged(slice, capsules).drop(Merged))
   }
 
-  /** The freshen pipeline over a base slice. Every policy is evaluated
-    * against the SAME base read — the analogue of the single shared async
-    * client read all policies reuse (`impl/InternalFreshKijiTableReader.java:496-502`)
-    * — then all updates merge onto it. */
-  private def freshenCapsules(slice: DataFrame, capsules: Seq[Capsule]): DataFrame =
-    freshenWithOutcomes(slice, capsules)._1
-
-  /** As [[freshenCapsules]], additionally returning the (budget-filtered)
-    * per-capsule outcomes whose scored rows actually merged — the delta
-    * footprint [[writeBackDelta]] needs. */
-  private def freshenWithOutcomes(slice: DataFrame,
-      capsules: Seq[Capsule]): (DataFrame, Seq[CapsuleOutcome]) = {
-    slice.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    val outcomes = capsules.map(c => computeScored(slice, c))
-
-    // allowPartial=false (the reference default, `FreshKijiTableReaderBuilder.java:63`):
-    // a row with ANY stale-but-unscored (over budget) column takes NO updates
-    // at all — the caller sees the cached pre-score read for that row, and the
-    // next run picks it up ("late commit",
-    // `test/impl/TestInternalFreshKijiTableReader.java:497-506`).
-    // allowPartial=true: per-column merges land independently.
-    val filtered =
-      if (config.allowPartial || outcomes.forall(_.unscoredKeys.isEmpty)) outcomes
-      else {
-        // NOT persisted: a persist here outlives the returned frame (the
-        // library never learns when the caller is done — the round-1 leak).
-        // The frame is a key-only anti-join subplan; the identical broadcast
-        // subplans below dedupe via ReuseExchange within each action, so
-        // recomputation costs one probe + one broadcast build per action.
-        val anyUnscored = outcomes.flatMap(_.unscoredKeys)
-          .reduce(_ unionByName _).distinct()
-        // cheap probe: when the budget covered every stale row, skip the
-        // per-capsule anti-joins entirely
-        if (anyUnscored.limit(1).count() == 0) outcomes
-        else outcomes.map(o => o.copy(scored =
-          o.scored.join(broadcast(anyUnscored), Seq(EntityView.EntityId), "left_anti")))
+  /** The slice plus `stale(i)`/`scored(i)` per capsule and [[Blocked]], every
+    * policy evaluated against the SAME base read (the reference's shared
+    * client read, `impl/InternalFreshKijiTableReader.java:496-502`). A
+    * policy with its own data request gets every column of it (R23,
+    * `:588-617`). Capsule i scores its n smallest stale ids; the rest pass
+    * through stale, like a timed-out read whose producer commits late
+    * (:703-724). allowPartial=false (the reference default,
+    * `FreshKijiTableReaderBuilder.java:63`) blocks every update on a row
+    * with any stale capsule left unscored; the next run picks it up
+    * (`test/impl/TestInternalFreshKijiTableReader.java:497-506`). */
+  private def flagged(slice: DataFrame, capsules: Seq[Capsule]): DataFrame = {
+    val ks = capsules.indices
+    val flags = slice.select(col("*") +: ks.map { i =>
+      val c = capsules(i)
+      val fresh = c.policy.ownRequest match {
+        case Some(req) if req.columns.nonEmpty => c.policy.isFreshCells(
+          req.columns.map(cn => cn -> EntityView.resolveCell(slice.schema, cn)), config.asOf)
+        case _ => c.policy.isFresh(EntityView.resolveCell(slice.schema, c.attachment), config.asOf)
       }
-    (filtered.foldLeft(slice)((df, o) => mergeScored(df, o)), filtered)
-  }
-
-  private final case class CapsuleOutcome(
-      capsule: Capsule,
-      scored: DataFrame,
-      unscoredKeys: Option[DataFrame])
-
-  /** Evaluate one capsule against the base slice: predicate → budgeted stale
-    * set → score. */
-  private def computeScored(slice: DataFrame, c: Capsule): CapsuleOutcome = {
-    // R23: a policy that declares its own data request has EVERY column of
-    // that request resolved and passed to isFreshCells (reference
-    // `shouldUseClientDataRequest() == false`,
-    // `impl/InternalFreshKijiTableReader.java:588-617`: the policy's
-    // request is issued separately and its FULL row data fed to isFresh —
-    // so multi-column policies can correlate columns none of which is the
-    // attachment). The engine freshens over the full slice and projects
-    // the client request afterwards, so the policy's columns are always
-    // present here; the trait default keeps single-column policies on the
-    // first-column predicate they had before.
-    val freshP = c.policy.ownRequest match {
-      case Some(req) if req.columns.nonEmpty =>
-        val cells = req.columns.map(cn =>
-          cn -> EntityView.resolveCell(slice.schema, cn))
-        c.policy.isFreshCells(cells, config.asOf)
-      case _ =>
-        c.policy.isFresh(EntityView.resolveCell(slice.schema, c.attachment),
-          config.asOf)
-    }
-    val stale = slice.filter(!coalesce(freshP, lit(false)))
-
-    // Deterministic budget: the N smallest entity ids among stale rows get
-    // scored this run (TakeOrdered on the key column only — no global sort of
-    // data rows); the rest pass through stale, like a timed-out read whose
-    // producer commits late (:703-724).
-    val (budgeted, unscored) = config.budgetRows match {
+      (!coalesce(fresh, lit(false))).as(stale(i))
+    }: _*)
+    config.budgetRows match {
+      case None => flags.select(col("*") +: ks.map(i => col(stale(i)).as(scored(i))) :+
+        lit(false).as(Blocked): _*)
       case Some(n) =>
-        val keys = stale.select(col(EntityView.EntityId))
-          .orderBy(col(EntityView.EntityId))
-          .limit(math.min(n, Int.MaxValue.toLong).toInt)
-        (stale.join(broadcast(keys), Seq(EntityView.EntityId), "left_semi"),
-          Some(stale.select(col(EntityView.EntityId))
-            .join(broadcast(keys), Seq(EntityView.EntityId), "left_anti")))
-      case None => (stale, None)
+        val scoredP = ks.map(i => col(stale(i)) && coalesce(
+          col(EntityView.EntityId) <= col("__cutoffs").getItem(i), lit(false)))
+        flags.withColumn("__cutoffs", cutoffs(flags, ks.size, n).scalar())
+          .select(flags.columns.toSeq.map(quoted) ++ ks.map(i => scoredP(i).as(scored(i))) :+
+            (if (config.allowPartial) lit(false)
+            else ks.map(i => col(stale(i)) && !scoredP(i)).reduce(_ || _)).as(Blocked): _*)
     }
-
-    val ctx = ScorerContext(config.asOf, c.stores)
-    CapsuleOutcome(c, c.scorer.score(c.scorer.dataRequest.select(budgeted), ctx), unscored)
   }
 
-  /** Newest-wins merge of one capsule's scores. Writes land on the ATTACHED
-    * column, overriding the scorer's declared output (reference:
-    * `package-info.java:72-80`, `impl/KijiFreshProducerContext.java:84-131`). */
-  private def mergeScored(df: DataFrame, o: CapsuleOutcome): DataFrame = {
-    val c = o.capsule
-    if (EntityView.isMapFamily(df.schema, c.attachment.family)) {
-      // Map-family writes: (entity_id, qualifier, value) rows; a qualified
-      // attachment pins the qualifier.
-      val tall = c.attachment.qualifier match {
-        case Some(q) => o.scored.withColumn("qualifier", lit(q))
-        case None    => o.scored
-      }
-      val s = tall.groupBy(col(EntityView.EntityId))
-        .agg(map_from_entries(collect_list(struct(col("qualifier"), col("value"))))
-          .as("__scores"))
-      val fam = c.attachment.family
-      df.join(s, Seq(EntityView.EntityId), "left")
-        .withColumn(fam,
-          when(col("__scores").isNotNull,
-            map_concat(coalesce(col(fam), map()),
-              transform_values(col("__scores"), (q, v) =>
-                Cells.put(try_element_at(coalesce(col(fam), map()), q), lit(config.asOf), v))))
-          .otherwise(col(fam)))
-        .drop("__scores")
-    } else if (c.attachment.isFullyQualified) {
-      val s = o.scored.withColumnRenamed("value", "__score")
-        .withColumn("__scored", lit(true))
-      df.join(s, Seq(EntityView.EntityId), "left")
-        .withColumn(c.attachment.flat,
-          when(col("__scored").isNotNull,
-            Cells.put(col(c.attachment.flat), lit(config.asOf), col("__score")))
-          .otherwise(col(c.attachment.flat)))
-        .drop("__score", "__scored")
-    } else throw new IllegalStateException(
-      s"Family-level attachment '${c.attachment}' on a group-type family " +
-        "(validation should have rejected this)")
+  /** One row, one array: capsule i's cutoff at index i, its n-th smallest
+    * stale id (its largest when fewer are stale; NULL when none is or
+    * n = 0). `row_number() <= n` per capsule over the tall (capsule,
+    * entity_id) frame is one bounded top-n. Read as a scalar subquery: it
+    * runs once per query, when the query runs, and every scorer's branch
+    * reuses it. A cross join would put a join into each branch, and column
+    * pruning would split k cutoff columns into a different fold per branch. */
+  private def cutoffs(flags: DataFrame, k: Int, n: Long): DataFrame =
+    flags.select(col(EntityView.EntityId), explode(array_compact(
+        array((0 until k).map(i => when(col(stale(i)), lit(i))): _*))).as("__capsule"))
+      .withColumn("__rank", row_number().over(
+        Window.partitionBy(col("__capsule")).orderBy(col(EntityView.EntityId))))
+      .filter(col("__rank") <= lit(math.min(n, Int.MaxValue.toLong).toInt))
+      .agg(array((0 until k).map(i =>
+        max(when(col("__capsule") === lit(i), col(EntityView.EntityId)))): _*).as("__cutoffs"))
+
+  /** Each scorer runs over its `scored(i)` rows; the k score frames union
+    * wide (one nullable column per capsule, so capsules may differ in value
+    * type), group by entity id once and left-join onto the flags once.
+    * Writes land on the ATTACHED column, newest first, overriding the
+    * scorer's declared output (reference: `package-info.java:72-80`,
+    * `impl/KijiFreshProducerContext.java:84-131`). Returns the slice's
+    * columns (entity id first) plus [[Merged]]: the row took an update. */
+  private def freshenMerged(slice: DataFrame, capsules: Seq[Capsule]): DataFrame = {
+    val flags = flagged(slice, capsules)
+    val ks = capsules.indices
+    val isMap = capsules.map(c => EntityView.isMapFamily(slice.schema, c.attachment.family))
+    ks.find(i => !isMap(i) && !capsules(i).attachment.isFullyQualified).foreach(i =>
+      throw new IllegalStateException(s"Family-level attachment '${capsules(i).attachment}' " +
+        "on a group-type family (validation should have rejected this)"))
+    val wide = ks.map { i =>
+      val c = capsules(i)
+      val rows = c.scorer.dataRequest.select(flags.filter(col(scored(i))))
+      // map-family writes are (qualifier, value); a qualified attachment pins the qualifier
+      val v = if (!isMap(i)) struct(col("value").as("value")) else struct(
+        c.attachment.qualifier.fold(col("qualifier"))(lit(_)).as("qualifier"), col("value").as("value"))
+      c.scorer.score(rows, ScorerContext(config.asOf, c.stores))
+        .select(col(EntityView.EntityId), v.as(score(i)))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val aggs = ks.map(i => (if (isMap(i)) map_from_entries(collect_list(col(score(i))))
+      else first(col(score(i)), ignoreNulls = true)).as(score(i)))
+    val lands = ks.map(i => !col(Blocked) &&
+      (if (isMap(i)) coalesce(size(col(score(i))), lit(0)) > 0 else col(score(i)).isNotNull))
+    // map families merge per qualifier with no duplicate key: existing
+    // qualifiers keep their place, new ones follow in score order
+    def write(i: Int, cell: Column): Column = if (!isMap(i))
+      Cells.put(cell, lit(config.asOf), col(score(i)).getField("value"))
+    else {
+      val (old, sc) = (coalesce(cell, map()), col(score(i)))
+      def put(q: Column, v: Column) = Cells.put(try_element_at(old, q), lit(config.asOf), v)
+      map_concat(
+        transform_values(old, (q, v) => when(map_contains_key(sc, q), put(q, sc(q))).otherwise(v)),
+        transform_values(map_filter(sc, (q, _) => !map_contains_key(old, q)), put))
+    }
+    val target = ks.map(i => if (isMap(i)) capsules(i).attachment.family else capsules(i).attachment.flat)
+    val written = ks.groupBy(target).map { case (name, is) =>
+      name -> is.foldLeft(quoted(name))((cell, i) => when(lands(i), write(i, cell)).otherwise(cell))
+    }
+    flags.join(wide.groupBy(col(EntityView.EntityId)).agg(aggs.head, aggs.tail: _*),
+        Seq(EntityView.EntityId), "left")
+      .select(col(EntityView.EntityId) +: slice.columns.toSeq.filter(_ != EntityView.EntityId)
+        .map(n => written.getOrElse(n, quoted(n)).as(n)) :+ lands.reduce(_ || _).as(Merged): _*)
   }
 
   // ------------------------------------------------------------ public API
@@ -260,7 +244,22 @@ final class FreshReader(
   /** Freshened full view (all columns) — for write-back jobs. */
   def freshenAll(request: DataRequest): DataFrame = {
     val capsules = capsulesFor(request)
-    if (capsules.isEmpty) view else freshenCapsules(view, capsules)
+    if (capsules.isEmpty) view else freshenMerged(view, capsules).drop(Merged)
+  }
+
+  /** What [[freshenAll]] would do, counted in one aggregation over the same
+    * flags (one job, which the freshen paths never run) — the reference's
+    * timed-out/partial read outcome (`:703-724`), visible in batch. */
+  def freshenReport(request: DataRequest): FreshenReport = {
+    val capsules = capsulesFor(request)
+    if (capsules.isEmpty) return FreshenReport(Nil, 0L)
+    val counts = count(lit(1)) +: capsules.indices.flatMap(i =>
+      Seq(count_if(col(stale(i))), count_if(col(scored(i))))) :+ count_if(col(Blocked))
+    val r = flagged(view, capsules).agg(counts.head, counts.tail: _*).head()
+    FreshenReport(capsules.zipWithIndex.map { case (c, i) =>
+      val (stale, scored) = (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
+      CapsuleReport(c.attachment, r.getLong(0), stale, scored, stale - scored)
+    }, r.getLong(counts.size - 1))
   }
 
   /** Write-back merge job (SURVEY §2.2 S2): freshen + overwrite. At 100 TB
@@ -288,17 +287,13 @@ final class FreshReader(
     require(partitionBy.nonEmpty, "writeBackDelta requires partition columns")
     val capsules = capsulesFor(request)
     if (capsules.isEmpty) return // nothing attached → nothing stale → no-op
-    val (freshened, outcomes) = freshenWithOutcomes(view, capsules)
-    val scoredKeys = outcomes.map(_.scored.select(col(EntityView.EntityId)))
-      .reduce(_ unionByName _).distinct()
-    val touched = freshened
-      .join(broadcast(scoredKeys), Seq(EntityView.EntityId), "left_semi")
-      .select(partitionBy.map(col): _*).distinct()
+    val freshened = freshenMerged(view, capsules)
+    val touched = freshened.filter(col(Merged)).select(partitionBy.map(col): _*).distinct()
     // every row of a touched partition must be written (dynamic overwrite
     // replaces whole partitions); an empty delta writes nothing and
     // replaces nothing
-    val rows = freshened.join(broadcast(touched), partitionBy, "left_semi")
-    rows.write.mode("overwrite")
+    freshened.join(broadcast(touched), partitionBy, "left_semi").drop(Merged)
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
       .parquet(outPath)
@@ -319,16 +314,20 @@ final class FreshReader(
     val base = TxStore.currentVersion(txPath)
     val capsules = capsulesFor(request)
     if (capsules.isEmpty) return base
-    val (freshened, outcomes) = freshenWithOutcomes(view, capsules)
-    val scoredKeys = outcomes.map(_.scored.select(col(EntityView.EntityId)))
-      .reduce(_ unionByName _).distinct()
-    val delta = freshened.join(broadcast(scoredKeys), Seq(EntityView.EntityId), "left_semi")
+    val delta = freshenMerged(view, capsules).filter(col(Merged)).drop(Merged)
     TxStore.merge(view.sparkSession, txPath, delta, EntityView.EntityId,
       expectedVersion = Some(base))
   }
 }
 
 object FreshReader {
+  private def stale(i: Int) = s"__stale$i"
+  private def scored(i: Int) = s"__scored$i"
+  private def score(i: Int) = s"__score$i"
+  private val Blocked = "__blocked"
+  private val Merged = "__merged"
+  private def quoted(name: String) = col("`" + name.replace("`", "``") + "`")
+
   private def noStores(name: String): DataFrame =
     throw new IllegalArgumentException(s"No store loader configured (wanted '$name')")
 

@@ -178,9 +178,10 @@ object TextAnalysis {
     * integer-quantized, engine-exact. Documents shorter than n tokens get
     * zero totals (frac 0).
     *
-    * Plan: one window-lead pass builds grams (same shape as
-    * [[graft.llmops.Dedup.shingleIndex]] minus the distinct), one
-    * aggregation per (id, gram), one per id — all shuffles key on doc id.
+    * Plan: one window-lead pass builds the positional grams (duplicates
+    * kept — unlike [[graft.llmops.Dedup.shingleIndex]], whose native
+    * per-row loop dedups them), one aggregation per (id, gram), one per
+    * id — all shuffles key on doc id.
     * Returns (id, dup_chars, total_chars, dup_frac_q) for one n. */
   def repetitionMetrics(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {

@@ -76,11 +76,6 @@ final case class DataRequest(
   * `.first()` is newest (reference: `src/main/java/org/kiji/scoring/lib/NewerThan.java:80-83`).
   */
 object Cells {
-  def cellType(valueType: DataType): ArrayType =
-    ArrayType(StructType(Seq(
-      StructField("ts", LongType, nullable = false),
-      StructField("value", valueType, nullable = true))))
-
   /** Newest cell (versions kept sorted desc ⇒ element 1). `try_element_at`:
     * empty cells yield NULL rather than an ANSI error. */
   def newest(c: Column): Column = try_element_at(c, lit(1))

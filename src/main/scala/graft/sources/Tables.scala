@@ -67,10 +67,6 @@ object Tables {
           s"events.ts has unsupported type $other (expected int64 nanos, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
   }
-
-  /** Register every testdata table as a temp view (for spark.sql parity tests). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }
 
 /** Key-value store loaders — side inputs for scorers/policies (SURVEY §2.1

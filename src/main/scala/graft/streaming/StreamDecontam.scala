@@ -13,10 +13,10 @@ import graft.llmops.TextOps.tokens
   * a stream against reference data" deployment, where the reference
   * updates on index rebuild, not per event.
   *
-  * The gram extractor is a pure expression tree (array ops only — the
-  * batch-side [[graft.llmops.Dedup.shingleIndex]] uses a lag window, which
-  * streams can't), so the whole per-batch plan is stateless until the
-  * final per-doc count.
+  * The gram extractor is a pure per-row expression (array ops, or the
+  * native digest loop — like the batch-side
+  * [[graft.llmops.Dedup.shingleIndex]], it needs no window), so the whole
+  * per-batch plan is stateless until the final per-doc count.
   *
   * Scale: the static side is the SMALL side by construction (eval sets are
   * bounded) and broadcast; the stream side never shuffles for the probe —

@@ -25,9 +25,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingDedup {
 
-  /** Input: content hash (e.g. sha2-256 of the text) + document id. */
-  case class DocArrival(sha: String, id: Long)
-
   /** Emitted once per distinct hash: the accepted representative and the
     * 0-based micro-batch ordinal it arrived in (from the caller's stage
     * numbering, carried on the row). */

@@ -41,6 +41,18 @@ object Fixtures {
     ).toDS.toDF
   }
 
+  case class WideRow(entity_id: String, g_c0: Seq[LCell], g_c1: Seq[LCell], g_c2: Seq[LCell],
+      g_c3: Seq[LCell], g_c4: Seq[LCell], g_c5: Seq[LCell])
+
+  /** `n` string-keyed entities `u0`…`u<n-1>` with six one-version long cells
+    * `g:c0`…`g:c5`: cell c of row i holds (ts(i, c), 10·i + c). */
+  def wideCells(spark: SparkSession, n: Int, ts: (Int, Int) => Long): DataFrame = {
+    import spark.implicits._
+    def cell(i: Int, c: Int) = Seq(LCell(ts(i, c), 10L * i + c))
+    (0 until n).map(i => WideRow(s"u$i", cell(i, 0), cell(i, 1), cell(i, 2), cell(i, 3),
+      cell(i, 4), cell(i, 5))).toDS.toDF
+  }
+
   case class RegistryUserRow(entity_id: String, info_name: Seq[SCell],
       info_email: Seq[SCell], networks: Map[String, Seq[SCell]])
 
@@ -59,6 +71,15 @@ object Fixtures {
 
 /** Demo producer: visits+1 (`TestFreshnessDemo.java:56-59`). */
 class VisitsIncrement extends IncrementScorer(ColumnName.qualified("info", "visits"))
+
+/** Counter increments on the [[Fixtures.wideCells]] columns `g:c<i>`. */
+abstract class WideIncrement(c: Int) extends IncrementScorer(ColumnName.qualified("g", s"c$c"))
+class WideInc0 extends WideIncrement(0)
+class WideInc1 extends WideIncrement(1)
+class WideInc2 extends WideIncrement(2)
+class WideInc3 extends WideIncrement(3)
+class WideInc4 extends WideIncrement(4)
+class WideInc5 extends WideIncrement(5)
 
 /** Rewrite producer: constant 'new-val' on family:qual0
   * (`TestInternalFreshKijiTableReader.java:86-89,407-431`). */
@@ -85,6 +106,16 @@ class MapIncrement extends Scorer {
     stale.select(col("entity_id"), explode(col("map")).as(Seq("qualifier", "cell")))
       .select(col("entity_id"), col("qualifier"),
         (coalesce(Cells.newestValue(col("cell")), lit(0)) + lit(1)).as("value"))
+}
+
+/** Counter on ONE qualifier of the map family: map:qualifier + 1. */
+class MapQualifierIncrement extends ExprScorer {
+  override def dataRequest: DataRequest = DataRequest(Seq(ColumnName("map:qualifier")))
+  override def outputColumn: ColumnName = ColumnName("map:qualifier")
+  override def scoreExpr(ctx: ScorerContext) = {
+    import org.apache.spark.sql.functions._
+    coalesce(Cells.newestValue(col("map_qualifier")), lit(0)) + lit(1)
+  }
 }
 
 /** KV-join producer (`TestKVStores.java:85-92`): species = cats[name]. */

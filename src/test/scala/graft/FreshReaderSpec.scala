@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.FreshReader
+import graft.engine.{CapsuleReport, FreshReader, FreshenReport}
 import graft.model.{ColumnName, DataRequest}
 import graft.policy.{AlwaysFreshen, NewerDependency, NewerThan, ShelfLife}
 import graft.registry.FreshnessManager
@@ -109,6 +109,19 @@ class FreshReaderSpec extends AnyFunSuite with SparkSpec {
     assert(mapVal(after1) == Map("foo" -> 2))
     val r2 = FreshReader.builder(m).withTable("table", after1).withAsOf(200L).build()
     assert(mapVal(r2.freshenAll(req)) == Map("foo" -> 3))
+  }
+
+  test("qualified attachment into a map family writes only its qualifier") {
+    val rowData = Fixtures.rowDataTest(spark)
+    val m = managerFor("table" -> rowData)
+    m.storePolicy("table", ColumnName("map:qualifier"),
+      classOf[MapQualifierIncrement].getName, new AlwaysFreshen)
+    val out = FreshReader.builder(m).withTable("table", rowData).withAsOf(100L).build()
+      .freshenAll(DataRequest(Seq(ColumnName("map:qualifier"))))
+      .selectExpr("entity_id", "map['qualifier'][0].value", "size(map['qualifier'])", "size(map)")
+      .collect().map(x => x.getString(0) -> (x.getInt(1), x.getInt(2), x.getInt(3))).toMap
+    // foo: 1 → 2 on top of its old version; bar: the qualifier is new (0 + 1)
+    assert(out == Map("foo" -> (2, 2, 1), "bar" -> (1, 1, 1)))
   }
 
   test("family-level freshener yields ONE capsule even when several qualifiers are requested") {
@@ -277,5 +290,78 @@ class FreshReaderSpec extends AnyFunSuite with SparkSpec {
     r.rereadPolicies()
     assert(r.capsulesFor(req).isEmpty)
     assert(visitsOf(r.freshenTable(req)) == Map("foo" -> 10L, "bar" -> 100L))
+  }
+
+  test("a map-family freshen leaves the session conf as it found it") {
+    val rowData = Fixtures.rowDataTest(spark)
+    val m = managerFor("table" -> rowData)
+    m.storePolicy("table", ColumnName("map"), classOf[MapIncrement].getName, new AlwaysFreshen)
+    val before = spark.conf.getAll
+    FreshReader.builder(m).withTable("table", rowData).withAsOf(100L).build()
+      .freshenAll(DataRequest(Seq(ColumnName("map")))).collect()
+    assert(spark.conf.getAll == before)
+  }
+
+  test("freshenReport counts checked, stale, scored, over-budget and blocked rows") {
+    val user = Fixtures.userCounter(spark)
+    def report(budget: Option[Long], allowPartial: Boolean): FreshenReport = {
+      val m = managerFor("user" -> user)
+      m.storePolicy("user", ColumnName("info:name"),
+        classOf[NameRewrite].getName, new AlwaysFreshen)        // stale: {bar, foo}
+      m.storePolicy("user", ColumnName("info:visits"),
+        classOf[VisitsIncrement].getName, new NewerThan(3L))    // stale: {foo}
+      val b = FreshReader.builder(m).withTable("user", user).withAsOf(1000L)
+        .returnPartiallyFreshData(allowPartial)
+      budget.fold(b)(b.withBudgetRows).build()
+        .freshenReport(DataRequest(Seq(ColumnName("info:name"), ColumnName("info:visits"))))
+    }
+    val name = ColumnName("info:name")
+    val visits = ColumnName("info:visits")
+    // budget 1: name scores bar only, so foo (stale name over budget) is blocked
+    assert(report(Some(1L), allowPartial = false) == FreshenReport(Seq(
+      CapsuleReport(name, 2, 2, 1, 1), CapsuleReport(visits, 2, 1, 1, 0)), 1))
+    assert(report(Some(1L), allowPartial = true).blockedRows == 0)
+    assert(report(None, allowPartial = false) == FreshenReport(Seq(
+      CapsuleReport(name, 2, 2, 2, 0), CapsuleReport(visits, 2, 1, 1, 0)), 0))
+    assert(FreshReader.builder(managerFor("user" -> user)).withTable("user", user).build()
+      .freshenReport(DataRequest(Seq(name))) == FreshenReport(Nil, 0))
+  }
+
+  test("three budgeted capsules on string ids match the plain-Scala budget semantics") {
+    val n = 20
+    // NewerThan(5) on every cell: c0 stale on 10 rows, c1 on 4, c2 on none
+    def ts(i: Int, c: Int): Long = c match {
+      case 0 => (i * 7) % 10L
+      case 1 => if (i % 5 == 0) 0L else 9L
+      case _ => 9L
+    }
+    val table = Fixtures.wideCells(spark, n, ts)
+    val ids = (0 until n).map(i => s"u$i")
+    val caps = 0 until 3
+    def stale(i: Int, c: Int) = ts(i, c) < 5
+    val m = managerFor("wide" -> table)
+    caps.foreach(c => m.storePolicy("wide", ColumnName(s"g:c$c"),
+      s"graft.WideInc$c", new NewerThan(5L)))
+    val req = DataRequest(caps.map(c => ColumnName(s"g:c$c")))
+    for (budget <- Seq(0L, 3L, 100L); allowPartial <- Seq(false, true)) {
+      val scored = caps.map(c => ids.indices.filter(stale(_, c)).sortBy(ids).take(budget.toInt).toSet)
+      val blocked = ids.indices.filter(i =>
+        !allowPartial && caps.exists(c => stale(i, c) && !scored(c)(i))).toSet
+      val want = ids.indices.map(i => ids(i) -> caps.map { c =>
+        val v = 10L * i + c
+        if (scored(c)(i) && !blocked(i)) (v + 1, 2) else (v, 1)
+      }).toMap
+      val r = FreshReader.builder(m).withTable("wide", table).withAsOf(1000L)
+        .withBudgetRows(budget).returnPartiallyFreshData(allowPartial).build()
+      val got = r.freshenAll(req).select(col("entity_id") +: caps.flatMap(c => Seq(
+          expr(s"g_c$c[0].value"), size(col(s"g_c$c")))): _*)
+        .collect().map(x => x.getString(0) -> caps.map(c =>
+          (x.getLong(1 + 2 * c), x.getInt(2 + 2 * c)))).toMap
+      assert(got == want, s"budget $budget, allowPartial $allowPartial")
+      assert(r.freshenReport(req) == FreshenReport(caps.map { c =>
+        val st = ids.indices.count(stale(_, c))
+        CapsuleReport(ColumnName(s"g:c$c"), n, st, scored(c).size, st - scored(c).size)
+      }, blocked.size), s"report at budget $budget, allowPartial $allowPartial")
+    }
   }
 }

@@ -998,4 +998,50 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // windows here are over the metadata-scale score grid by design (the
     // q311/q313 count-table discipline), so no keying pin applies
   }
+
+  /** A budgeted reader over [[Fixtures.wideCells]] with k capsules attached. */
+  private def budgetedWide(k: Int) = {
+    import graft.engine.FreshReader
+    import graft.model.{ColumnName, DataRequest}
+    import graft.registry.FreshnessManager
+    val table = Fixtures.wideCells(spark, 40, (i, c) => (i * (c + 3)) % 10L)
+    val m = new FreshnessManager(n => if (n == "wide") Some(table.schema) else None)
+    (0 until k).foreach(c => m.storePolicy("wide", ColumnName(s"g:c$c"),
+      s"graft.WideInc$c", new graft.policy.NewerThan(5L)))
+    (FreshReader.builder(m).withTable("wide", table).withAsOf(1000L).withBudgetRows(3).build(),
+      DataRequest((0 until k).map(c => ColumnName(s"g:c$c"))))
+  }
+
+  test("budgeted freshen: non-reused exchanges and joins do not grow with the capsule count") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object walk extends AdaptiveSparkPlanHelper
+    def counts(k: Int): (Int, Int) = {
+      val (r, req) = budgetedWide(k)
+      val df = r.freshenAll(req)
+      df.queryExecution.toRdd.count()
+      val p = df.queryExecution.executedPlan
+      (walk.collectWithSubqueries(p) { case e: Exchange => e }.size,
+        walk.collectWithSubqueries(p) { case j: BaseJoinExec => j }.size)
+    }
+    assert(counts(2) == counts(6))
+  }
+
+  test("budgeted freshen starts no job while its frame is built") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (r, req) = budgetedWide(6)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      r.freshenAll(req)
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0)
+  }
 }
