@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.Spread
 import TextOps._
 
@@ -665,9 +666,12 @@ object Dedup {
     * canonical-document assignment for near-dup clusters (edges from
     * [[jaccardPairs]] or [[lshCandidates]]).
     *
-    * Each iteration is one join + one aggregation (shuffles on node id);
-    * convergence takes graph-diameter iterations — near-dup graphs are
-    * near-cliques, so 2-3 in practice. For billion-edge general graphs use
+    * Each iteration is one join + one aggregation (shuffles on node id)
+    * and ONE job: its convergence sum is observed while its checkpoint
+    * runs. Labels start one hop out, so a graph of diameter d needs d
+    * iterations after the seed, the last one confirming — near-dup graphs
+    * are near-cliques and stars, so 1-2 in practice. `maxIter` counts the
+    * seed as the first iteration. For billion-edge general graphs use
     * [[connectedComponentsStars]] (O(log² n) rounds at any diameter); the
     * declared surface only needs diameter-bounded dup clusters. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
@@ -684,30 +688,38 @@ object Dedup {
     val e = edges.select("id_a", "id_b").localCheckpoint() // edge pipeline runs ONCE
     val bidir = e.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(e.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // Labels only ever decrease, so an unchanged Σlbl means no label
+    // changed: an exact fixpoint test that needs no join with the previous
+    // labels, observed during the checkpoint that materializes them.
+    // Decimal accumulation: a 64-bit sum of ids overflows under ANSI.
+    def total(c: String): Column = coalesce(sum(col(c).cast("decimal(38,0)")),
+      lit(0).cast("decimal(38,0)"))
     // Iterate over the edge-TOUCHED subgraph only: a node with no edge is
     // its own component by definition and joins the result at the end. At
     // corpus scale the dup graph is a vanishing fraction of the node set —
     // propagation shuffles ∝ |dup graph| per iteration, not ∝ |corpus|.
-    var labels = bidir.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    // labels only ever decrease, so Σlbl is strictly monotone until the
-    // fixpoint — a one-aggregate convergence probe (no join with the
-    // previous labels needed); empty graph sums to 0 and converges at once
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = lblSum(labels)
-    var converged = false
-    var iter = 0
+    // The seed is already one hop out (each touched node's closed-
+    // neighbourhood minimum); Σid is the sum of the identity labels one
+    // hop earlier, so the seed converges at once when no edge lowers one.
+    val (seed, s0) = Materialize.observed(
+      bidir.groupBy("src").agg(least(col("src"), min("dst")).as("lbl"))
+        .select(col("src").as("id"), col("lbl")),
+      total("lbl"), total("id"))
+    var labels = seed
+    var prevSum = s0.getDecimal(0)
+    var converged = maxIter >= 1 && prevSum.compareTo(s0.getDecimal(1)) == 0
+    var iter = 1
     while (!converged && iter < maxIter) {
       val prop = bidir.join(labels, bidir("src") === labels("id"))
         .select(col("dst").as("id"), col("lbl"))
-      val next = labels.select("id", "lbl").unionByName(prop)
-        .groupBy("id").agg(min("lbl").as("lbl")).localCheckpoint()
-      val nextSum = lblSum(next)
+      val (next, s) = Materialize.observed(
+        labels.select("id", "lbl").unionByName(prop)
+          .groupBy("id").agg(min("lbl").as("lbl")),
+        total("lbl"))
       labels = next // superseded checkpoint blocks are freed by the ContextCleaner
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
+      val cur = s.getDecimal(0)
+      converged = cur.compareTo(prevSum) == 0
+      prevSum = cur
       iter += 1
     }
     // A truncated run must not masquerade as correct components: at the cap
@@ -716,6 +728,8 @@ object Dedup {
       s"connectedComponents did not converge within maxIter=$maxIter " +
         "(graph diameter exceeds the iteration budget; raise maxIter or use " +
         "connectedComponentsStars)")
+    // every touched node once (edge endpoints missing from `nodes`
+    // included), then each untouched node row as its own component
     val singletons = nodes.select("id")
       .join(labels.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
@@ -736,7 +750,8 @@ object Dedup {
     * union of stars rooted at each component's minimum id. Rounds
     * localCheckpoint for the same plan-growth reason as
     * [[connectedComponents]]; convergence is an order-independent
-    * (count, Σxxhash64) edge-set checksum. */
+    * (count, Σxxhash64) edge-set checksum, observed during the round's own
+    * checkpoint (one job per round). */
   def connectedComponentsStars(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 25): DataFrame = {
     def canon(e: DataFrame): DataFrame =
@@ -757,21 +772,21 @@ object Dedup {
           .unionByName(mins.select(col("u").as("v"), col("m")))
       linked.select(col("v").as("id_a"), col("m").as("id_b"))
     }
-    def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
-      // decimal accumulation: a 64-bit sum of xxhash64 values overflows
-      // under ANSI arithmetic
-      val r = e.agg(count(lit(1)),
+    // checkpoint one round's edge set and read its checksum off that same
+    // job; decimal accumulation: a 64-bit sum of xxhash64 values overflows
+    // under ANSI arithmetic
+    def checkpointed(e: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+      val (cp, r) = Materialize.observed(e, count(lit(1)),
         coalesce(sum(xxhash64(col("id_a"), col("id_b")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head()
-      (r.getLong(0), r.getDecimal(1))
+          lit(0).cast("decimal(38,0)")))
+      (cp, (r.getLong(0), r.getDecimal(1)))
     }
-    var e = canon(edges).localCheckpoint()
-    var prev = checksum(e)
+    var (e, prev) = checkpointed(canon(edges))
     var converged = prev._1 == 0L
     var round = 0
     while (!converged && round < maxRounds) {
-      e = canon(star(star(e, large = true), large = false)).localCheckpoint()
-      val cur = checksum(e)
+      val (next, cur) = checkpointed(canon(star(star(e, large = true), large = false)))
+      e = next
       converged = cur == prev
       prev = cur
       round += 1

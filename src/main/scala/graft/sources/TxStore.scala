@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Transactional copy-on-write table: versioned MANIFESTS over immutable
   * bucket-partitioned parquet files — the upgrade of the partition-scoped
   * dynamic overwrite (`FreshReader.writeBackDelta`) to real snapshot
@@ -359,10 +361,12 @@ object TxStore {
     }
     val added = delta.schema.filterNot(f => stored.fieldNames.contains(f.name))
     val schemaJson = org.apache.spark.sql.types.StructType(stored ++ added).json
-    val d = delta.withColumn("__bucket", bucketOf(col(key), nBuckets))
-      .localCheckpoint() // one materialization: bucket list + join input
-    val touched = d.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by nBuckets — metadata scale
+    // one materialization: the join input, with the touched-bucket set
+    // (bounded by nBuckets — metadata scale) observed in the same job
+    val (d, touchedRow) = Materialize.observed(
+      delta.withColumn("__bucket", bucketOf(col(key), nBuckets)),
+      collect_set(col("__bucket")))
+    val touched = touchedRow.getSeq[Int](0).toSet
     if (touched.isEmpty) return v
     val (touchedEntries, untouchedEntries) = entries.partition(e => touched(e.bucket))
     // read ONLY the touched buckets' current rows
@@ -470,11 +474,11 @@ object TxStore {
     val v = expectedVersion.getOrElse(currentVersion(path))
     require(v >= 0, s"no committed snapshot at $path — init first")
     val m = readManifest(path, v)
-    val d = keys.select(col(key)).distinct()
-      .withColumn("__bucket", bucketOf(col(key), m.nBuckets))
-      .localCheckpoint()
-    val touched = d.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+    val (d, touchedRow) = Materialize.observed(
+      keys.select(col(key)).distinct()
+        .withColumn("__bucket", bucketOf(col(key), m.nBuckets)),
+      collect_set(col("__bucket")))
+    val touched = touchedRow.getSeq[Int](0).toSet
     if (touched.isEmpty) return v
     val (touchedEntries, untouchedEntries) = m.entries.partition(e => touched(e.bucket))
     if (touchedEntries.isEmpty) return v // keys hash to buckets holding nothing

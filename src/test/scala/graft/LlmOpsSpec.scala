@@ -110,6 +110,47 @@ class LlmOpsSpec extends AnyFunSuite with SparkSpec {
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
+  // Pinned rows of the output contract: every edge endpoint gets one row,
+  // in `nodes` or not, and every untouched `nodes` row is its own component.
+  private def ccRows(nodes: Seq[Long], edges: Seq[(Long, Long)],
+      maxIter: Int = 20): List[(Long, Long)] = {
+    import spark.implicits._
+    Dedup.connectedComponents(nodes.toDF("id"), edges.toDF("id_a", "id_b"), maxIter)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toList
+  }
+
+  test("connectedComponents: edge endpoints absent from nodes still get a row") {
+    assert(ccRows(Seq(1L, 2L, 3L, 20L), Seq((1L, 2L), (2L, 3L), (3L, 4L), (30L, 31L))) ==
+      List((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (20L, 20L), (30L, 30L), (31L, 30L)))
+  }
+
+  test("connectedComponents: a repeated node id repeats only as a singleton") {
+    assert(ccRows(Seq(1L, 1L, 2L, 5L, 5L), Seq((1L, 2L))) ==
+      List((1L, 1L), (2L, 1L), (5L, 5L), (5L, 5L)))
+  }
+
+  test("connectedComponents: no edges gives all singletons and returns") {
+    assert(ccRows(Seq(1L, 2L, 3L), Seq.empty) == List((1L, 1L), (2L, 2L), (3L, 3L)))
+    // a self-loop lowers no label: the seed is the fixpoint within maxIter = 1
+    assert(ccRows(Seq(1L, 2L), Seq((2L, 2L)), maxIter = 1) == List((1L, 1L), (2L, 2L)))
+  }
+
+  test("connectedComponents: a chain longer than maxIter throws; maxIter keeps its meaning") {
+    // a 6-node path has diameter 5: five propagation rounds and a confirming
+    // one, so maxIter = 6 is the least budget that converges, in either
+    // edge orientation
+    val chain = (0L until 5L).map(i => (i, i + 1))
+    val all0 = (0L to 5L).map(_ -> 0L).toList
+    assert(ccRows(0L to 5L, chain, maxIter = 6) == all0)
+    assert(ccRows(0L to 5L, chain.map(_.swap), maxIter = 6) == all0)
+    for (m <- Seq(1, 5)) {
+      val ex = intercept[IllegalStateException](ccRows(0L to 5L, chain, maxIter = m))
+      assert(ex.getMessage.contains(s"did not converge within maxIter=$m"))
+    }
+    val long = (0L until 30L).map(i => (i, i + 1))
+    intercept[IllegalStateException](ccRows(0L to 30L, long))
+  }
+
   test("connectedComponentsStars: long chains resolve in O(log² n) rounds") {
     import spark.implicits._
     // a 12-node chain (diameter 11 — min-label needs 11 iterations, star

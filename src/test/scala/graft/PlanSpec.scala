@@ -1029,19 +1029,44 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("budgeted freshen starts no job while its frame is built") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (r, req) = budgetedWide(6)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      r.freshenAll(req)
-      org.apache.spark.ListenerBusAccess.drain(sc)
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get == 0)
+    assert(JobLog.of(spark)(r.freshenAll(req)).jobs.isEmpty)
+  }
+
+  test("connectedComponents on stars: one job per checkpoint stage, no convergence probe, one round") {
+    import spark.implicits._
+    import graft.llmops.Dedup
+    // three stars (centres 1, 10, 20, each the minimum of its star) and two
+    // singletons: the one-hop seed already holds every final label, so one
+    // confirming round follows it. Jobs: the edge checkpoint (1), the seed's
+    // aggregation (2: shuffle map + result) and the round's join and
+    // aggregation (3: broadcast + shuffle map + result). A separate
+    // convergence probe or a second round adds jobs.
+    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L, 21L, 22L, 23L, 30L, 31L).toDF("id")
+    val edges = Seq((1L, 2L), (3L, 1L), (1L, 4L), (10L, 11L), (12L, 10L),
+      (20L, 21L), (22L, 20L), (20L, 23L)).toDF("id_a", "id_b")
+    val log = JobLog.of(spark)(Dedup.connectedComponents(nodes, edges))
+    assert(log.executions.size == 3, s"edge, seed and round checkpoints: $log")
+    assert(log.jobs.size == 6, s"jobs: $log")
+    assert(log.result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L,
+        20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 30L -> 30L, 31L -> 31L))
+  }
+
+  test("TxStore.merge and delete: checkpoint, write and stats are their only SQL executions") {
+    import spark.implicits._
+    import graft.sources.TxStore
+    // the touched-bucket set is observed during the checkpoint; a separate
+    // bucket-collect job would be a fourth execution (the parquet reads'
+    // schema jobs run outside any SQL execution)
+    val dir = java.nio.file.Files.createTempDirectory("plan-tx").toString
+    TxStore.init((0L until 50L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k", 8, Seq("k"))
+    val merge = JobLog.of(spark)(
+      TxStore.merge(spark, dir, Seq((3L, "x"), (60L, "y")).toDF("k", "v"), "k"))
+    assert(merge.executions.size == 3, s"merge: $merge")
+    assert(merge.executions.head.startsWith("localCheckpoint at TxStore.scala"), s"merge: $merge")
+    val delete = JobLog.of(spark)(TxStore.delete(spark, dir, Seq(3L, 4L).toDF("k"), "k"))
+    assert(delete.executions.size == 3, s"delete: $delete")
+    assert(TxStore.currentVersion(dir) == 2)
   }
 }
