@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.model.{Cells, ColumnName, DataRequest, EntityView}
 import graft.policy.FreshnessPolicy
 import graft.registry.{FreshnessManager, FreshnessRecord}
-import graft.score.{Scorer, ScorerContext}
+import graft.score.{ExprScorer, Scorer, ScorerContext}
 
 /** Reader configuration — mirrors `FreshKijiTableReaderBuilder`'s knobs and
   * defaults (reference: `src/main/java/org/kiji/scoring/FreshKijiTableReaderBuilder.java:61-219`):
@@ -59,12 +59,15 @@ final case class FreshenReport(capsules: Seq[CapsuleReport], blockedRows: Long)
   * deterministic row budget reproduces the stale-fallback semantics
   * (`:703-724`) without wall clocks.
   *
-  * Plan shape, the same for any number k of capsules: one projection of
-  * every stale flag; with a budget, one bounded top-n of the stale ids per
-  * capsule folded into a one-row cutoff frame, read as a scalar subquery;
-  * each Scorer over its rows; one wide union, one group by entity id and
-  * one join back. No job runs while the frame is built. The top-n keeps n
-  * ids per capsule and map task before its shuffle while n is at most
+  * Plan shape, for any number k of capsules: one projection of every stale
+  * flag and of every [[graft.score.ExprScorer]]'s score; with a budget, one
+  * bounded top-n of the stale ids per capsule folded into a one-row cutoff
+  * frame, read as a scalar subquery; each other scorer over its rows, then
+  * one wide union, one group by entity id and one join back. So the slice
+  * is scanned once, once more with a budget, and once more per scorer that
+  * is not an expression (or is attached to a whole map family). No job runs
+  * while the frame is built. The top-n keeps n ids per capsule and map task
+  * before its shuffle while n is at most
   * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); above
   * that, one task sorts all of a capsule's stale ids.
   */
@@ -173,9 +176,15 @@ final class FreshReader(
       .agg(array((0 until k).map(i =>
         max(when(col("__capsule") === lit(i), col(EntityView.EntityId)))): _*).as("__cutoffs"))
 
-  /** Each scorer runs over its `scored(i)` rows; the k score frames union
-    * wide (one nullable column per capsule, so capsules may differ in value
-    * type), group by entity id once and left-join onto the flags once.
+  /** Every capsule's score as one column, NULL on the rows it does not
+    * score. An [[ExprScorer]]'s score is one more column of the flag
+    * projection: with the raw columns renamed aside, its request's windowed
+    * columns take their request names, `scoreExpr` is evaluated over them on
+    * the `scored(i)` rows, and the raw names come back. Any other scorer, and
+    * a family-level map attachment, runs over its `scored(i)` rows; those
+    * score frames union wide (one nullable column per capsule, so capsules
+    * may differ in value type), group by entity id once and left-join onto
+    * the flags once; with none of them, there is no union and no join.
     * Writes land on the ATTACHED column, newest first, overriding the
     * scorer's declared output (reference: `package-info.java:72-80`,
     * `impl/KijiFreshProducerContext.java:84-131`). Returns the slice's
@@ -187,17 +196,37 @@ final class FreshReader(
     ks.find(i => !isMap(i) && !capsules(i).attachment.isFullyQualified).foreach(i =>
       throw new IllegalStateException(s"Family-level attachment '${capsules(i).attachment}' " +
         "on a group-type family (validation should have rejected this)"))
-    val wide = ks.map { i =>
-      val c = capsules(i)
-      val rows = c.scorer.dataRequest.select(flags.filter(col(scored(i))))
-      // map-family writes are (qualifier, value); a qualified attachment pins the qualifier
-      val v = if (!isMap(i)) struct(col("value").as("value")) else struct(
-        c.attachment.qualifier.fold(col("qualifier"))(lit(_)).as("qualifier"), col("value").as("value"))
-      c.scorer.score(rows, ScorerContext(config.asOf, c.stores))
-        .select(col(EntityView.EntityId), v.as(score(i)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val aggs = ks.map(i => (if (isMap(i)) map_from_entries(collect_list(col(score(i))))
-      else first(col(score(i)), ignoreNulls = true)).as(score(i)))
+    def ctx(i: Int) = ScorerContext(config.asOf, capsules(i).stores)
+    val fused = ks.flatMap(i => capsules(i).scorer match {
+      case e: ExprScorer if !isMap(i) || capsules(i).attachment.isFullyQualified => Some(i -> e)
+      case _ => None
+    }).toMap
+    val withFused = ks.filter(fused.contains).foldLeft(flags) { (df, i) =>
+      val v = fused(i).scoreExpr(ctx(i))
+      // a fused map-family capsule is qualified: it pins its qualifier
+      val s = if (isMap(i)) map(lit(capsules(i).attachment.qualifier.get), v)
+        else struct(v.as("value"))
+      val names = df.columns.toSeq
+      df.select(names.map(n => quoted(n).as(aside(n))) ++
+          fused(i).dataRequest.windowed(slice.schema): _*)
+        .select(names.map(n => quoted(aside(n)).as(n)) :+
+          when(quoted(aside(scored(i))), s).as(score(i)): _*)
+    }
+    val branched = ks.filterNot(fused.contains)
+    val scores = if (branched.isEmpty) withFused else {
+      val wide = branched.map { i =>
+        val c = capsules(i)
+        val rows = c.scorer.dataRequest.select(flags.filter(col(scored(i))))
+        // map-family writes are (qualifier, value); a qualified attachment pins the qualifier
+        val v = if (!isMap(i)) struct(col("value").as("value")) else struct(
+          c.attachment.qualifier.fold(col("qualifier"))(lit(_)).as("qualifier"), col("value").as("value"))
+        c.scorer.score(rows, ctx(i)).select(col(EntityView.EntityId), v.as(score(i)))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      val aggs = branched.map(i => (if (isMap(i)) map_from_entries(collect_list(col(score(i))))
+        else first(col(score(i)), ignoreNulls = true)).as(score(i)))
+      withFused.join(wide.groupBy(col(EntityView.EntityId)).agg(aggs.head, aggs.tail: _*),
+        Seq(EntityView.EntityId), "left")
+    }
     val lands = ks.map(i => !col(Blocked) &&
       (if (isMap(i)) coalesce(size(col(score(i))), lit(0)) > 0 else col(score(i)).isNotNull))
     // map families merge per qualifier with no duplicate key: existing
@@ -215,9 +244,7 @@ final class FreshReader(
     val written = ks.groupBy(target).map { case (name, is) =>
       name -> is.foldLeft(quoted(name))((cell, i) => when(lands(i), write(i, cell)).otherwise(cell))
     }
-    flags.join(wide.groupBy(col(EntityView.EntityId)).agg(aggs.head, aggs.tail: _*),
-        Seq(EntityView.EntityId), "left")
-      .select(col(EntityView.EntityId) +: slice.columns.toSeq.filter(_ != EntityView.EntityId)
+    scores.select(col(EntityView.EntityId) +: slice.columns.toSeq.filter(_ != EntityView.EntityId)
         .map(n => written.getOrElse(n, quoted(n)).as(n)) :+ lands.reduce(_ || _).as(Merged): _*)
   }
 
@@ -324,6 +351,7 @@ object FreshReader {
   private def stale(i: Int) = s"__stale$i"
   private def scored(i: Int) = s"__scored$i"
   private def score(i: Int) = s"__score$i"
+  private def aside(name: String) = s"__raw_$name"
   private val Blocked = "__blocked"
   private val Merged = "__merged"
   private def quoted(name: String) = col("`" + name.replace("`", "``") + "`")

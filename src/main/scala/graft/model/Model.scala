@@ -38,13 +38,16 @@ final case class DataRequest(
   /** Compile onto an entity view: project entity_id + requested cell columns,
     * each restricted to the ts range and the N newest versions. Column pruning
     * and parquet pushdown are Catalyst's job once this is declared (SURVEY §4).
-    *
-    * Map-family columns (`MapType`) get the version window applied per
+    */
+  def select(view: DataFrame): DataFrame = view.select(windowed(view.schema): _*)
+
+  /** The columns [[select]] projects over a view of this schema: entity_id,
+    * then every requested cell column windowed and aliased to its request
+    * name. Map-family columns (`MapType`) get the version window applied per
     * qualifier via `transform_values`; a qualified column addressed INTO a map
     * family resolves to `element_at(map, qualifier)`.
     */
-  def select(view: DataFrame): DataFrame = {
-    val schema = view.schema
+  def windowed(schema: StructType): Seq[Column] = {
     def window(c: Column): Column = {
       val ranged = timeRange match {
         case Some((lo, hi)) => Cells.inRange(c, lo, hi)
@@ -52,7 +55,7 @@ final case class DataRequest(
       }
       Cells.latest(ranged, maxVersions)
     }
-    val cols = col(EntityView.EntityId) +: columns.flatMap { cn =>
+    col(EntityView.EntityId) +: columns.flatMap { cn =>
       if (EntityView.isMapFamily(schema, cn.family)) cn.qualifier match {
         case Some(q) => Seq(window(try_element_at(col(cn.family), lit(q))).as(cn.flat))
         case None    => Seq(transform_values(col(cn.family), (_, v) => window(v)).as(cn.flat))
@@ -66,7 +69,6 @@ final case class DataRequest(
           .sorted.map(f => window(col(f)).as(f))
       }
     }
-    view.select(cols: _*)
   }
 }
 

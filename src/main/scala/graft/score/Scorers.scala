@@ -49,11 +49,18 @@ object Scorer {
 }
 
 /** Base class for single-column expression scorers: score = a Column
-  * expression over the entity view (codegen-friendly, no UDF). */
+  * expression over the entity view (codegen-friendly, no UDF).
+  *
+  * The engine evaluates `scoreExpr` inside the projection that computes the
+  * stale flags, not through [[score]]: it sees the request's windowed
+  * columns under their request names, plus `entity_id`, and runs only on
+  * the rows being scored. So `scoreExpr` must be row-local (no aggregate,
+  * window, generator or join) and yield one value per row. `score` is final
+  * so both evaluations stay the same function. */
 abstract class ExprScorer extends Scorer {
   /** The scoring expression evaluated over the stale slice. */
   def scoreExpr(ctx: ScorerContext): Column
-  override def score(stale: DataFrame, ctx: ScorerContext): DataFrame =
+  final override def score(stale: DataFrame, ctx: ScorerContext): DataFrame =
     stale.select(col(EntityView.EntityId), scoreExpr(ctx).as("value"))
 }
 

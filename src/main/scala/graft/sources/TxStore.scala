@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.Materialize
 
@@ -98,9 +99,7 @@ object TxStore {
 
   private case class Manifest(nBuckets: Int, schemaJson: String, txn: Option[Long],
       statsCols: Seq[String], entries: Seq[Entry]) {
-    def schema: org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
   /** Manifest of `v`: header nBuckets + table schema (JSON), an optional
@@ -170,15 +169,16 @@ object TxStore {
   }
 
   /** Zone maps for freshly staged entries: ONE Spark pass over the staged
-    * files (grouped by input file), min/max of each stats column cast to
+    * files (grouped by input file, read with the snapshot's `schema`, so no
+    * footer-inference job runs), min/max of each stats column cast to
     * LONG. A column with no non-null values in a file gets no stats there
     * (that file is conservatively kept by every prune on it). Cost is a
     * scan of exactly the files just written — the same rows the writer
     * already shuffled — and only when the store declares stats columns. */
   private def withStats(spark: SparkSession, path: String, entries: Seq[Entry],
-      statsCols: Seq[String]): Seq[Entry] = {
+      statsCols: Seq[String], schema: StructType): Seq[Entry] = {
     if (statsCols.isEmpty || entries.isEmpty) return entries
-    val df = spark.read
+    val df = spark.read.schema(schema)
       .parquet(entries.map(e => Paths.get(path, "data", e.file).toString): _*)
     val present = statsCols.filter(df.columns.contains)
     if (present.isEmpty) return entries
@@ -221,7 +221,7 @@ object TxStore {
     require(currentVersion(path) == -1, s"$path already holds a TxStore")
     writeVersionData(df.withColumn("__bucket", bucketOf(col(key), nBuckets)), path, "v0")
     commitManifest(path, 0, nBuckets, df.schema.json,
-      withStats(df.sparkSession, path, listVersionFiles(path, "v0"), statsCols),
+      withStats(df.sparkSession, path, listVersionFiles(path, "v0"), statsCols, df.schema),
       statsCols = statsCols)
   }
 
@@ -236,17 +236,18 @@ object TxStore {
   /** Read a set of manifest entries, grouped by version dir so the
     * `__bucket` partition column recovers from the directory layout.
     * Version dirs written before an additive schema evolution lack the
-    * newer columns — they read as nulls (allowMissingColumns), exactly the
-    * Avro/parquet additive-evolution contract. Keeps `__bucket` (callers
-    * drop or reuse it). */
+    * newer columns — read with the snapshot's `schema`, they surface them
+    * as nulls, exactly the Avro/parquet additive-evolution contract. The
+    * given schema also spares the footer-inference job a schema-less read
+    * runs. Keeps `__bucket` (callers drop or reuse it). */
   private def readFiles(spark: SparkSession, path: String,
-      entries: Seq[Entry]): DataFrame = {
+      entries: Seq[Entry], schema: StructType): DataFrame = {
     val byVdir = entries.groupBy(_.file.split("/", 2)(0))
     byVdir.toSeq.sortBy(_._1).map { case (vdir, es) =>
-      spark.read
+      spark.read.schema(schema)
         .option("basePath", Paths.get(path, "data", vdir).toString)
         .parquet(es.map(e => Paths.get(path, "data", e.file).toString): _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }.reduce(_.unionByName(_))
   }
 
   /** Shared snapshot read over the entries passing `keep` — the manifest-
@@ -260,7 +261,7 @@ object TxStore {
     if (entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    readFiles(spark, path, entries)
+    readFiles(spark, path, entries, m.schema)
       .drop("__bucket")
       // the manifest schema is authoritative for column set AND order:
       // rows from pre-evolution files surface the added columns as null
@@ -360,7 +361,7 @@ object TxStore {
           s"${d.get.dataType.simpleString} (not supported)")
     }
     val added = delta.schema.filterNot(f => stored.fieldNames.contains(f.name))
-    val schemaJson = org.apache.spark.sql.types.StructType(stored ++ added).json
+    val schemaJson = StructType(stored ++ added).json
     // one materialization: the join input, with the touched-bucket set
     // (bounded by nBuckets — metadata scale) observed in the same job
     val (d, touchedRow) = Materialize.observed(
@@ -372,7 +373,7 @@ object TxStore {
     // read ONLY the touched buckets' current rows
     val base =
       if (touchedEntries.isEmpty) d.limit(0).drop("__bucket")
-      else readFiles(spark, path, touchedEntries).drop("__bucket")
+      else readFiles(spark, path, touchedEntries, stored).drop("__bucket")
     // allowMissingColumns: surviving base rows null-fill any column this
     // delta just added (additive evolution)
     val merged = base
@@ -386,8 +387,8 @@ object TxStore {
     writeVersionData(merged, path, dirName)
     // fresh files get fresh zone maps; untouched entries keep theirs
     try commitManifest(path, nv, nBuckets, schemaJson,
-      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols) ++
-        untouchedEntries,
+      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols,
+        StructType(stored ++ added)) ++ untouchedEntries,
       (prevTxn.toSeq ++ txn.toSeq).reduceOption(_ max _), m.statsCols)
     catch {
       case e: java.util.ConcurrentModificationException =>
@@ -443,14 +444,14 @@ object TxStore {
     // one shuffle on the bucket id: every fragmented bucket's rows land in
     // one task, so partitionBy emits one file per bucket (or consecutive
     // sorted chunks of maxRecordsPerFile rows under clustered compaction)
-    val repart = readFiles(spark, path, touched).repartition(col("__bucket"))
+    val repart = readFiles(spark, path, touched, m.schema).repartition(col("__bucket"))
     val rows =
       if (sortCols.isEmpty) repart
       else repart.sortWithinPartitions(col("__bucket") +: sortCols.map(col): _*)
     val nv = v + 1
     val dirName = s"v$nv-${java.util.UUID.randomUUID().toString.take(8)}"
     writeVersionData(rows, path, dirName, maxRecordsPerFile)
-    val fresh = withStats(spark, path, listVersionFiles(path, dirName), m.statsCols)
+    val fresh = withStats(spark, path, listVersionFiles(path, dirName), m.statsCols, m.schema)
     try commitManifest(path, nv, m.nBuckets, m.schemaJson,
       fresh ++ untouched, m.txn, m.statsCols)
     catch {
@@ -482,14 +483,14 @@ object TxStore {
     if (touched.isEmpty) return v
     val (touchedEntries, untouchedEntries) = m.entries.partition(e => touched(e.bucket))
     if (touchedEntries.isEmpty) return v // keys hash to buckets holding nothing
-    val base = readFiles(spark, path, touchedEntries).drop("__bucket")
+    val base = readFiles(spark, path, touchedEntries, m.schema).drop("__bucket")
     val remaining = base.join(d.select(col(key)), Seq(key), "left_anti")
       .withColumn("__bucket", bucketOf(col(key), m.nBuckets))
     val nv = v + 1
     val dirName = s"v$nv-${java.util.UUID.randomUUID().toString.take(8)}"
     writeVersionData(remaining, path, dirName)
     try commitManifest(path, nv, m.nBuckets, m.schemaJson,
-      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols) ++
+      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols, m.schema) ++
         untouchedEntries,
       m.txn, m.statsCols)
     catch {
@@ -568,10 +569,10 @@ object TxStore {
     val dirName = s"v$nv-${java.util.UUID.randomUUID().toString.take(8)}"
     // each row's bucket comes from the ORIGINAL files' partition column, so
     // compaction never needs to know the key column
-    val withBucket = readFiles(spark, path, entries)
+    val withBucket = readFiles(spark, path, entries, m.schema)
     writeVersionData(withBucket.repartition(col("__bucket")), path, dirName)
     try commitManifest(path, nv, nBuckets, schemaJson,
-      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols),
+      withStats(spark, path, listVersionFiles(path, dirName), m.statsCols, m.schema),
       prevTxn, m.statsCols)
     catch {
       case e: java.util.ConcurrentModificationException =>

@@ -118,6 +118,53 @@ class MapQualifierIncrement extends ExprScorer {
   }
 }
 
+/** A constant on a second qualifier of the map family. */
+class MapOtherConst extends ExprScorer {
+  override def dataRequest: DataRequest = DataRequest(Seq(ColumnName("map:other")))
+  override def outputColumn: ColumnName = ColumnName("map:other")
+  override def scoreExpr(ctx: ScorerContext) = org.apache.spark.sql.functions.lit(7)
+}
+
+/** Two newest versions of g:c1 within ts [1, 8): 100 × their value sum +
+  * how many there are. */
+class WindowedSum extends ExprScorer {
+  override def dataRequest: DataRequest =
+    DataRequest(Seq(ColumnName("g:c1")), maxVersions = 2, timeRange = Some((1L, 8L)))
+  override def outputColumn: ColumnName = ColumnName("g:c1")
+  override def scoreExpr(ctx: ScorerContext) = {
+    import org.apache.spark.sql.functions._
+    aggregate(col("g_c1"), lit(0L), (acc, v) => acc + v.getField("value")) * lit(100L) +
+      size(col("g_c1")).cast("long")
+  }
+}
+
+/** Newest g:c2 + 1 when that value is even; NULL when it is odd. */
+class EvenOnly extends ExprScorer {
+  override def dataRequest: DataRequest = DataRequest(Seq(ColumnName("g:c2")))
+  override def outputColumn: ColumnName = ColumnName("g:c2")
+  override def scoreExpr(ctx: ScorerContext) = {
+    import org.apache.spark.sql.functions._
+    val v = Cells.newestValue(col("g_c2"))
+    when(v % lit(2L) === lit(0L), v + lit(1L))
+  }
+}
+
+/** `inner` through the plain [[Scorer]] SPI, so the engine scores it over
+  * its own rows (union, group by and join back) rather than in the flag
+  * projection: the reference the expression path is checked against. */
+abstract class Branched(inner: ExprScorer) extends Scorer {
+  override def dataRequest: DataRequest = inner.dataRequest
+  override def outputColumn: ColumnName = inner.outputColumn
+  override def score(stale: DataFrame, ctx: ScorerContext): DataFrame =
+    stale.select(org.apache.spark.sql.functions.col("entity_id"), inner.scoreExpr(ctx).as("value"))
+}
+class BranchedWideInc0 extends Branched(new WideInc0)
+class BranchedWideInc2 extends Branched(new WideInc2)
+class BranchedWindowedSum extends Branched(new WindowedSum)
+class BranchedEvenOnly extends Branched(new EvenOnly)
+class BranchedMapQualifierIncrement extends Branched(new MapQualifierIncrement)
+class BranchedMapOtherConst extends Branched(new MapOtherConst)
+
 /** KV-join producer (`TestKVStores.java:85-92`): species = cats[name]. */
 class CatsLookup extends KvLookupScorer(
   ColumnName.qualified("info", "name"), "cats", "producer-src",

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{CapsuleReport, FreshReader, FreshenReport}
 import graft.model.{ColumnName, DataRequest}
-import graft.policy.{AlwaysFreshen, NewerDependency, NewerThan, ShelfLife}
+import graft.policy.{AlwaysFreshen, FreshnessPolicy, NewerDependency, NewerThan, ShelfLife}
 import graft.registry.FreshnessManager
 
 /** Engine semantics — mirrors the scenarios of
@@ -363,5 +364,70 @@ class FreshReaderSpec extends AnyFunSuite with SparkSpec {
         CapsuleReport(ColumnName(s"g:c$c"), n, st, scored(c).size, st - scored(c).size)
       }, blocked.size), s"report at budget $budget, allowPartial $allowPartial")
     }
+  }
+
+  /** freshenAll's rows (by entity id) and the logical joins of its plan,
+    * with (column, scorer class, policy) attached. */
+  private def freshened(table: DataFrame, attach: Seq[(String, String, FreshnessPolicy)],
+      budget: Option[Long], allowPartial: Boolean): (Seq[Row], Int) = {
+    val m = managerFor("t" -> table)
+    attach.foreach { case (c, cls, p) => m.storePolicy("t", ColumnName(c), cls, p) }
+    val b = FreshReader.builder(m).withTable("t", table).withAsOf(1000L)
+      .returnPartiallyFreshData(allowPartial)
+    val df = budget.fold(b)(b.withBudgetRows).build()
+      .freshenAll(DataRequest(attach.map(a => ColumnName(a._1))))
+    (df.collect().sortBy(_.getString(0)).toSeq,
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size)
+  }
+
+  test("expression scorers in the flag projection write what the same scorers write as branches") {
+    import spark.implicits._
+    import Fixtures.{LCell, WideRow}
+    // g:c0 one version, stale when i % 10 < 5; g:c1 up to three versions
+    // (empty on every sixth row), stale when i % 5 < 2 or empty; g:c2 stale
+    // when i % 7 < 5, its value i odd on every other row
+    val table = (0 until 24).map { i =>
+      val c1 = if (i % 6 == 5) Nil else Seq(3L + i % 5, 2L, 0L).map(t => LCell(t, 1000L * t + i))
+      WideRow(s"u$i", Seq(LCell(i % 10, 10L * i)), c1, Seq(LCell(i % 7, i)),
+        Seq(LCell(9, 0)), Seq(LCell(9, 0)), Seq(LCell(9, 0)))
+    }.toDS().toDF()
+    def attach(prefix: String) = Seq("g:c0" -> "WideInc0", "g:c1" -> "WindowedSum",
+      "g:c2" -> "EvenOnly").map { case (c, cls) => (c, s"graft.$prefix$cls", new NewerThan(5L)) }
+    for (budget <- Seq(None, Some(0L), Some(3L)); allowPartial <- Seq(false, true)) {
+      val (fused, fusedJoins) = freshened(table, attach(""), budget, allowPartial)
+      val (branched, branchedJoins) = freshened(table, attach("Branched"), budget, allowPartial)
+      assert((fusedJoins, branchedJoins) == (0, 1))
+      assert(fused == branched, s"budget $budget, allowPartial $allowPartial")
+    }
+    // an expression that yields NULL on a scored row still writes (asOf, NULL)
+    val (rows, _) = freshened(table, attach(""), None, allowPartial = true)
+    val u1 = rows.find(_.getString(0) == "u1").get
+    assert(u1.getAs[collection.Seq[Row]]("g_c2") == Seq(Row(1000L, null), Row(1L, 1L)))
+    // two newest versions in [1, 8): u1 holds ts 4, 2 and 0 (values 4001, 2001, 1)
+    assert(u1.getAs[collection.Seq[Row]]("g_c1").head == Row(1000L, (4001L + 2001L) * 100 + 2))
+  }
+
+  test("a qualified map attachment, alone or beside a branch capsule in its family, " +
+      "writes the same as when it runs as a branch") {
+    val rowData = Fixtures.rowDataTest(spark)
+    def attach(qualifier: String, other: Option[String]) =
+      (("map:qualifier", s"graft.${qualifier}MapQualifierIncrement", new AlwaysFreshen) +:
+        other.map(cls => ("map:other", s"graft.$cls", new AlwaysFreshen)).toSeq)
+    for (budget <- Seq(None, Some(1L)); allowPartial <- Seq(false, true)) {
+      val (alone, aloneJoins) = freshened(rowData, attach("", None), budget, allowPartial)
+      val (aloneRef, _) = freshened(rowData, attach("Branched", None), budget, allowPartial)
+      assert(aloneJoins == 0)
+      assert(alone == aloneRef, s"alone, budget $budget, allowPartial $allowPartial")
+      val other = Some("BranchedMapOtherConst")
+      val (mixed, mixedJoins) = freshened(rowData, attach("", other), budget, allowPartial)
+      val (mixedRef, _) = freshened(rowData, attach("Branched", other), budget, allowPartial)
+      assert(mixedJoins == 1)
+      assert(mixed == mixedRef, s"mixed, budget $budget, allowPartial $allowPartial")
+    }
+    // unbudgeted, both qualifiers land on foo: qualifier 1 -> 2, other new
+    val (rows, _) = freshened(rowData, attach("", Some("BranchedMapOtherConst")), None, false)
+    val foo = rows.find(_.getString(0) == "foo").get
+      .getAs[collection.Map[String, collection.Seq[Row]]]("map")
+    assert(foo == Map("qualifier" -> Seq(Row(1000L, 2), Row(5L, 1)), "other" -> Seq(Row(1000L, 7))))
   }
 }

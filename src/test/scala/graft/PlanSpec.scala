@@ -999,15 +999,17 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // q311/q313 count-table discipline), so no keying pin applies
   }
 
-  /** A budgeted reader over [[Fixtures.wideCells]] with k capsules attached. */
-  private def budgetedWide(k: Int) = {
+  /** A budgeted reader over [[Fixtures.wideCells]] with k capsules attached,
+    * capsule c scored by the class `scorer(c)` (by default the expression
+    * scorer `WideInc<c>`). */
+  private def budgetedWide(k: Int, scorer: Int => String = c => s"graft.WideInc$c") = {
     import graft.engine.FreshReader
     import graft.model.{ColumnName, DataRequest}
     import graft.registry.FreshnessManager
     val table = Fixtures.wideCells(spark, 40, (i, c) => (i * (c + 3)) % 10L)
     val m = new FreshnessManager(n => if (n == "wide") Some(table.schema) else None)
     (0 until k).foreach(c => m.storePolicy("wide", ColumnName(s"g:c$c"),
-      s"graft.WideInc$c", new graft.policy.NewerThan(5L)))
+      scorer(c), new graft.policy.NewerThan(5L)))
     (FreshReader.builder(m).withTable("wide", table).withAsOf(1000L).withBudgetRows(3).build(),
       DataRequest((0 until k).map(c => ColumnName(s"g:c$c"))))
   }
@@ -1026,6 +1028,27 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
         walk.collectWithSubqueries(p) { case j: BaseJoinExec => j }.size)
     }
     assert(counts(2) == counts(6))
+  }
+
+  test("budgeted expression freshen: no join, and two slice scans at any capsule count") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object walk extends AdaptiveSparkPlanHelper
+    // (slice scans, joins) of the executed plan, subqueries included: the
+    // main pass and the cutoff subquery each scan the slice once
+    def shape(k: Int, scorer: Int => String = c => s"graft.WideInc$c"): (Int, Int) = {
+      val (r, req) = budgetedWide(k, scorer)
+      val df = r.freshenAll(req)
+      df.queryExecution.toRdd.count()
+      val p = df.queryExecution.executedPlan
+      (walk.collectWithSubqueries(p) { case s: LocalTableScanExec => s }.size,
+        walk.collectWithSubqueries(p) { case j: BaseJoinExec => j }.size)
+    }
+    assert(shape(2) == (2, 0))
+    assert(shape(6) == (2, 0))
+    // a scorer that is not an expression runs over its own rows and joins back
+    assert(shape(3, c => if (c == 2) "graft.BranchedWideInc2" else s"graft.WideInc$c") == (3, 1))
   }
 
   test("budgeted freshen starts no job while its frame is built") {
@@ -1057,8 +1080,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     import graft.sources.TxStore
     // the touched-bucket set is observed during the checkpoint; a separate
-    // bucket-collect job would be a fourth execution (the parquet reads'
-    // schema jobs run outside any SQL execution)
+    // bucket-collect job would be a fourth execution
     val dir = java.nio.file.Files.createTempDirectory("plan-tx").toString
     TxStore.init((0L until 50L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k", 8, Seq("k"))
     val merge = JobLog.of(spark)(
@@ -1068,5 +1090,21 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val delete = JobLog.of(spark)(TxStore.delete(spark, dir, Seq(3L, 4L).toDF("k"), "k"))
     assert(delete.executions.size == 3, s"delete: $delete")
     assert(TxStore.currentVersion(dir) == 2)
+  }
+
+  test("TxStore.read starts no job; merge starts none outside a SQL execution") {
+    import spark.implicits._
+    import graft.sources.TxStore
+    // reads take the manifest's schema, so no parquet footer-inference job
+    // runs, for the snapshot read or for the zone maps of staged files
+    val dir = java.nio.file.Files.createTempDirectory("plan-tx-schema").toString
+    TxStore.init((0L until 50L).map(i => (i, s"v$i")).toDF("k", "v"), dir, "k", 8, Seq("k"))
+    val read = JobLog.of(spark)(TxStore.read(spark, dir))
+    assert(read.jobs.isEmpty, s"read: $read")
+    val merge = JobLog.of(spark)(
+      TxStore.merge(spark, dir, Seq((3L, "x"), (60L, "y")).toDF("k", "v"), "k"))
+    assert(merge.jobs.nonEmpty && merge.jobs.forall(_.isDefined), s"merge: $merge")
+    assert(TxStore.read(spark, dir).filter($"k" === 3L).as[(Long, String)].collect().toSeq ==
+      Seq((3L, "x")))
   }
 }
